@@ -98,26 +98,6 @@ def _metadata_struct() -> Column:
     ).alias("metadata")
 
 
-def flatten_alerts(events: DataFrame) -> DataFrame:
-    """SensorEvent rows → one SnortAlert row per metrics[] element.
-
-    P1 explode (app.go:192) + P2 wide projection/rename (processor.go:
-    21-94) + P3 null guard (processor.go:22-24) + F1/F2 derivations.
-    """
-    exploded = events.filter(F.col("metrics").isNotNull()).select(
-        "*", F.explode("metrics").alias("_m")
-    )
-    cols = [
-        _metadata_struct(),
-        F.col(f"_m.snort_timestamp").alias("timestamp"),
-        F.col("snort_priority").alias("priority"),
-        priority_label("snort_priority").alias("priority_str"),
-    ]
-    cols += [F.col(src).alias(dst) for src, dst in _EVENT_RENAMES.items()]
-    cols += [F.col(f"_m.{src}").alias(dst) for src, dst in _METRIC_RENAMES.items()]
-    return exploded.select(cols)
-
-
 def with_kafka_envelope(events: DataFrame) -> DataFrame:
     """Flattened alerts + the Kafka output envelope (app.go:182-215).
 
@@ -156,3 +136,14 @@ def with_kafka_envelope(events: DataFrame) -> DataFrame:
     cols += [F.col(src).alias(dst) for src, dst in _EVENT_RENAMES.items()]
     cols += [F.col(f"_m.{src}").alias(dst) for src, dst in _METRIC_RENAMES.items()]
     return exploded.select(cols)
+
+
+def flatten_alerts(events: DataFrame) -> DataFrame:
+    """SensorEvent rows → one SnortAlert row per metrics[] element.
+
+    P1 explode (app.go:192) + P2 wide projection/rename (processor.go:
+    21-94) + P3 null guard (processor.go:22-24) + F1/F2 derivations:
+    ``with_kafka_envelope`` without its envelope columns.
+    """
+    envelope = ("key", "metric_idx", "headers", "event_time")
+    return with_kafka_envelope(events).drop(*envelope)

@@ -4,7 +4,8 @@ stage id relative to the pre-run snapshot, so UI eviction of old
 stages can never corrupt the diff, and the summed REST field names
 stay in sync with what the status API actually serves (the live
 end-to-end evidence is the bench run itself — BENCH_LOCAL.json
-`stage_metrics` with 45/45 queries captured)."""
+`stage_metrics` with 45/45 queries captured), and the size of the
+headline line callers parse."""
 
 from __future__ import annotations
 
@@ -124,3 +125,45 @@ def test_skew_split_detection_reads_only_new_executions(monkeypatch):
     assert bench._skew_split_fired(None, prev_max_sql_id=3) is True
     monkeypatch.setattr(bench, "_sql_executions", lambda spark: [])
     assert bench._skew_split_fired(None, prev_max_sql_id=0) is None
+
+
+def test_headline_line_fits_the_2000_char_tail():
+    """Callers keep only a 2,000-char stdout tail and parse the LAST
+    line from it, so the headline line must fit whole: the real
+    headline set, all eight stream rates and a full vs_prev block, at
+    sf0.1-sized values, serialized as main() prints it."""
+    import json
+
+    from event_stream_aggr_spark.plans.registry import load_all
+
+    names = sorted(n for n, spec in load_all().items() if spec.bench)
+    assert len(names) >= 47
+    timings = {n: round(0.25 + 0.0937 * i, 4) for i, n in enumerate(names)}
+    rates = (52079.1, 2822.3, 35411.1, 2253.5, 4454.2, 14071.7, 136081.2, 4558.8)
+    diagnostics = {
+        key: {rate_key: rate}
+        for (key, (_, rate_key)), rate in zip(bench.STREAM_RATES.items(), rates)
+    }
+    diagnostics["calibration"] = {
+        "start": {"min_sec": 0.3302},
+        "end": {"min_sec": 0.3706},
+        "during": {"baseline_min_sec": 0.1713, "p50_sec": 0.1959, "max_sec": 6.4211},
+    }
+    streams = ("alerts", "curation", "cep", "near_dedup", "entity_resolution")
+    diagnostics["vs_prev_same_boot"] = {
+        "prev_commit": "90981c6bcc42",
+        "median_ratio_cur_over_prev": 0.987,
+        "n_compared": len(names),
+        "stream_ratios": {s: 1.053 for s in streams},
+        "streams": {s: {"ratio_cur_over_prev": 1.053} for s in streams},
+        "queries": {n: {"ratio_cur_over_prev": 0.987} for n in names},
+    }
+    line = bench.headline_line(timings, diagnostics, 0.1)
+    printed = json.dumps(line, separators=(",", ":"))
+    assert len(printed) < 2000, len(printed)
+    parsed = json.loads(printed)
+    assert list(parsed["queries"]) == names
+    assert len(parsed["stream"]) == 8 and all(parsed["stream"].values())
+    assert parsed["vs_prev"]["stream_ratios"] == {s: 1.053 for s in streams}
+    assert parsed["calib_mid"] == [0.1713, 0.1959, 6.4211]
+    assert parsed["calibration_sec"] == 0.3302

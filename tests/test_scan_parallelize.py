@@ -85,14 +85,25 @@ def test_gate_off_when_layout_feeds_the_cores(spark, monkeypatch):
     assert "REPARTITION_BY_NUM" not in plan
 
 
-def test_values_identical_with_and_without(spark):
+@pytest.mark.parametrize(
+    "name, order",
+    [
+        ("lineitem", ("l_orderkey", "l_linenumber")),
+        ("embeddings", ("vec_id",)),
+        ("documents", ("doc_id",)),
+    ],
+    ids=["lineitem", "embeddings", "documents"],
+)
+def test_values_identical_with_and_without(spark, monkeypatch, name, order):
     # The repartition must be value-invisible: same rows either way.
-    on = load_table(spark, SF_CORRECTNESS, "lineitem").orderBy(
-        "l_orderkey", "l_linenumber"
-    )
-    off = load_table(
-        spark, SF_CORRECTNESS, "lineitem", parallelize=False
-    ).orderBy("l_orderkey", "l_linenumber")
+    # The floor is lowered so every keyed table's repartition is
+    # value-checked at sf0.01, where embeddings and documents fall
+    # below the default 256 KiB floor.
+    monkeypatch.setattr(tables, "SCAN_PAR_MIN_BYTES", 1)
+    on = load_table(spark, SF_CORRECTNESS, name, parallelize=True)
+    assert "REPARTITION_BY_NUM" in _plan(on)
+    on = on.orderBy(*order)
+    off = load_table(spark, SF_CORRECTNESS, name, parallelize=False).orderBy(*order)
     assert on.exceptAll(off).isEmpty() and off.exceptAll(on).isEmpty()
 
 

@@ -35,7 +35,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -100,6 +99,10 @@ def dense_customers(spark, k: int, out_dir: str) -> None:
     )
 
 
+#: the warm run's byte columns each cell records
+SPILL_KEYS = ("shuffle_write_mb", "spill_disk_mb", "spill_mem_mb")
+
+
 def ladder_cell(spark, sf_dir: str, cap: int, n_runs: int) -> dict:
     """qer04's refinement ladder at an explicit cap on the dense
     corpus: per-level kept counts + purge + completeness + time."""
@@ -113,22 +116,10 @@ def ladder_cell(spark, sf_dir: str, cap: int, n_runs: int) -> dict:
 
     a = _a_side(spark, sf_dir)
     b = _twin_side(spark, sf_dir)
-    runs = []
-    row: dict = {}
-    for i in range(n_runs):
-        pre = bench._max_stage_id(spark) if i == n_runs - 1 else None
-        t0 = time.perf_counter()
-        refinement_report(a, b, cap=cap).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        runs.append(time.perf_counter() - t0)
-        if pre is not None:
-            m = bench._stage_metrics_since(spark, pre)
-            if m:
-                row["shuffle_write_mb"] = m["shuffle_write_mb"]
-                row["spill_disk_mb"] = m["spill_disk_mb"]
-                row["spill_mem_mb"] = m["spill_mem_mb"]
-    row["sec"] = round(min(runs), 4)
+    sec, row = bench._min_time(
+        spark, lambda: refinement_report(a, b, cap=cap), n_runs, keys=SPILL_KEYS
+    )
+    row["sec"] = sec
     r = refinement_report(a, b, cap=cap).collect()[0].asDict()
     row.update(r)
     row["pair_completeness"] = round(
@@ -151,22 +142,13 @@ def composed_cell(spark, sf_dir: str, cap: int, n_runs: int) -> dict:
 
     a = _a_side(spark, sf_dir)
     b = _twin_side(spark, sf_dir)
-    runs = []
-    row: dict = {}
-    for i in range(n_runs):
-        pre = bench._max_stage_id(spark) if i == n_runs - 1 else None
-        t0 = time.perf_counter()
-        composed_blocking_report(a, b, cap=cap).write.mode(
-            "overwrite"
-        ).format("noop").save()
-        runs.append(time.perf_counter() - t0)
-        if pre is not None:
-            m = bench._stage_metrics_since(spark, pre)
-            if m:
-                row["shuffle_write_mb"] = m["shuffle_write_mb"]
-                row["spill_disk_mb"] = m["spill_disk_mb"]
-                row["spill_mem_mb"] = m["spill_mem_mb"]
-    row["sec"] = round(min(runs), 4)
+    sec, row = bench._min_time(
+        spark,
+        lambda: composed_blocking_report(a, b, cap=cap),
+        n_runs,
+        keys=SPILL_KEYS,
+    )
+    row["sec"] = sec
     r = composed_blocking_report(a, b, cap=cap).collect()[0].asDict()
     row.update(r)
     row["pair_completeness"] = round(
@@ -208,20 +190,8 @@ def probe_cell(spark, sf_dir: str, cap: int, n_runs: int) -> dict:
             )
         )
 
-    runs = []
-    row: dict = {}
-    for i in range(n_runs):
-        pre = bench._max_stage_id(spark) if i == n_runs - 1 else None
-        t0 = time.perf_counter()
-        report().write.mode("overwrite").format("noop").save()
-        runs.append(time.perf_counter() - t0)
-        if pre is not None:
-            m = bench._stage_metrics_since(spark, pre)
-            if m:
-                row["shuffle_write_mb"] = m["shuffle_write_mb"]
-                row["spill_disk_mb"] = m["spill_disk_mb"]
-                row["spill_mem_mb"] = m["spill_mem_mb"]
-    row["sec"] = round(min(runs), 4)
+    sec, row = bench._min_time(spark, report, n_runs, keys=SPILL_KEYS)
+    row["sec"] = sec
     row["n_records"] = n_records
     row["n_candidates"] = candidate_pairs(a, b, cap).count()
     purged = purged_block_counts(a, b, cap).first()

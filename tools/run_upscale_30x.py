@@ -15,7 +15,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -98,28 +97,18 @@ def main() -> None:
 def _probe(spark, specs, out) -> None:
     import bench
 
-    # warmup
-    specs[QUERIES[0]].fn(spark, BASE).write.mode("overwrite").format("noop").save()
+    bench._noop(specs[QUERIES[0]].fn(spark, BASE))  # warmup
 
     for name in QUERIES:
         row: dict = {}
         for label, sf_path in (("primary", BASE), ("probe", PROBE)):
-            runs = []
-            for i in range(2):
-                pre = bench._max_stage_id(spark) if i == 1 else None
-                t0 = time.perf_counter()
-                specs[name].fn(spark, sf_path).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                runs.append(time.perf_counter() - t0)
-                if i == 1 and pre is not None:
-                    m = bench._stage_metrics_since(spark, pre)
-                    if m:
-                        row[f"{label}_shuffle_write_mb"] = m["shuffle_write_mb"]
-                        row[f"{label}_input_mb"] = m["input_mb"]
-                        row[f"{label}_spill_disk_mb"] = m["spill_disk_mb"]
-                        row[f"{label}_spill_mem_mb"] = m["spill_mem_mb"]
-            row[f"{label}_sec"] = round(min(runs), 4)
+            sec, m = bench._min_time(
+                spark,
+                lambda: specs[name].fn(spark, sf_path),
+                keys=("shuffle_write_mb", "input_mb", "spill_disk_mb", "spill_mem_mb"),
+            )
+            row.update({f"{label}_{k}": v for k, v in m.items()})
+            row[f"{label}_sec"] = sec
         row["time_ratio"] = round(row["probe_sec"] / row["primary_sec"], 2)
         if row.get("primary_shuffle_write_mb"):
             row["shuffle_ratio"] = round(
@@ -172,14 +161,6 @@ def _skew_probe(spark, out, zdir: str) -> None:
         )
 
     conf = spark.conf
-    keys = (
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-    )
-    saved = {k: conf.get(k) for k in keys}
     section: dict = {
         "alpha": 1.1,
         "note": "salted-twin join at 30x; same scaled-down AQE triggers"
@@ -188,7 +169,7 @@ def _skew_probe(spark, out, zdir: str) -> None:
         " must say plain (the r11 credit), aqe_off.strategy salted with"
         " the excess-sized count",
     }
-    try:
+    with bench._conf_fence(spark):
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         conf.set(
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m"
@@ -201,30 +182,14 @@ def _skew_probe(spark, out, zdir: str) -> None:
                 conf.set("spark.sql.adaptive.skewJoin.enabled", skew_on)
                 li, o = build(sf_path)
                 choice, k = join_skew_strategy(li, "l_orderkey")
-                runs, metrics = [], {}
-                for i in range(2):
-                    pre = bench._max_stage_id(spark) if i == 1 else None
-                    t0 = time.perf_counter()
-                    li2, o2 = build(sf_path)
-                    revenue(auto_skew_join(li2, o2, "l_orderkey")).write.mode(
-                        "overwrite"
-                    ).format("noop").save()
-                    runs.append(time.perf_counter() - t0)
-                    if i == 1 and pre is not None:
-                        m = bench._stage_metrics_since(spark, pre)
-                        if m:
-                            metrics.update(
-                                shuffle_write_mb=m["shuffle_write_mb"],
-                                spill_disk_mb=m["spill_disk_mb"],
-                                spill_mem_mb=m["spill_mem_mb"],
-                            )
-                        metrics.update(
-                            bench._task_time_dist(
-                                spark, bench._new_stages_since(spark, pre)
-                            )
-                        )
+                sec, metrics = bench._min_time(
+                    spark,
+                    lambda: revenue(auto_skew_join(*build(sf_path), "l_orderkey")),
+                    keys=("shuffle_write_mb", "spill_disk_mb", "spill_mem_mb"),
+                    tasks=True,
+                )
                 row[variant] = {
-                    "sec": round(min(runs), 4),
+                    "sec": sec,
                     "strategy": {"choice": choice, "salt": k},
                     **metrics,
                 }
@@ -237,9 +202,6 @@ def _skew_probe(spark, out, zdir: str) -> None:
                     section["zipf_30x"]["aqe_on"]["sec"] / base, 2
                 )
                 section["data_ratio_30x_vs_zipf1"] = 3.0
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
     out["skew_twin_30x"] = section
 
 
