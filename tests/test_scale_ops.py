@@ -572,11 +572,14 @@ def test_join_skew_strategy_selects_and_sizes_salt(spark):
     )
     assert salt == expected
 
-    # clamp: a pathological stat cannot buy unbounded replication
-    assert join_skew_strategy(hot, "k", max_salt=4, aqe_backstop=False) == (
-        "salted",
-        4,
-    )
+    # clamp: at ratio 0.5 the unclamped salt is ceil(600*par / 500) =
+    # ceil(1.2*par) >= 5 for every par >= 4, so max_salt=4 cuts it to 4
+    assert join_skew_strategy(
+        hot, "k", task_budget_ratio=0.5, aqe_backstop=False
+    ) == ("salted", max(2, min(32, math.ceil(600 * par / 500.0))))
+    assert join_skew_strategy(
+        hot, "k", task_budget_ratio=0.5, max_salt=4, aqe_backstop=False
+    ) == ("salted", 4)
 
     # precomputed stats skip the aggregation pass but price identically
     assert join_skew_strategy(
