@@ -303,7 +303,7 @@ def main() -> None:
             "per_query": stage_metrics,
         },
         # LAST so it survives in the driver's output tail: the paired
-        # same-boot A/B vs the previous round-close commit (r9 ask #2)
+        # same-boot A/B vs the parent commit (r9 ask #2)
         "vs_prev_same_boot": vs_prev_same_boot(spark, specs, headline),
     }
     calib_end = calibration_probe(spark)
@@ -907,7 +907,7 @@ def curation_stream_bench(spark) -> dict:
     assignment, per micro-batch via foreachBatch — the ingest-time
     curation shape where each arriving shard is gated, span-deduped
     and packed before landing. Within-batch dedup scope is the
-    micro-batch (cross-batch exact dedup is the streaming/dedup.py
+    micro-batch (cross-batch exact dedup is the streaming/pipeline.py
     watermarked operator's job); docs/s counts INPUT documents so the
     gate's drop rate doesn't inflate the number."""
     from event_stream_aggr_spark.operators.dedup import curation_clean
@@ -1492,17 +1492,11 @@ def _er_block(spark) -> dict:
 
 
 def _prev_round_commit(here: str) -> str | None:
-    """Hash of the most recent DRIVER round-close commit whose TREE
-    differs from HEAD's — the exact tree the previous round's bench
-    measured. Only the driver's two round-close subject forms match
-    ('round N: verdict/advice/correctness/bench' and 'round N:
-    end-of-round snapshot ...'): a builder commit that merely BEGINS
-    'round N:' must not be picked, or the A/B silently pairs against a
-    mid-round tree and measures this round's own edits as ~1.0
-    (observed in round 11 before this tightening). The tree check
-    prevents a self-comparison: re-running bench right at a round-close
-    commit would otherwise pair HEAD against its own code."""
-    import re
+    """Hash of the nearest first-parent ancestor of HEAD whose TREE
+    differs from HEAD's — normally ``HEAD^``, the tree this change is
+    measured against. The tree check prevents a self-comparison: after
+    an empty commit (same tree as its parent) HEAD^ holds HEAD's own
+    code."""
     import subprocess
 
     def _git(*args):
@@ -1512,18 +1506,12 @@ def _prev_round_commit(here: str) -> str | None:
 
     try:
         head_tree = _git("rev-parse", "HEAD^{tree}").strip()
-        out = _git("log", "--format=%H %T %s", "-n", "500")
+        out = _git("log", "--first-parent", "--format=%H %T", "-n", "500", "HEAD^")
     except (OSError, subprocess.CalledProcessError):
         return None
-    close_subject = re.compile(
-        r"round \d+: (verdict/advice/correctness/bench|end-of-round snapshot)"
-    )
     for line in out.splitlines():
-        parts = line.split(" ", 2)
-        if len(parts) < 3:
-            continue
-        h, tree, subj = parts
-        if close_subject.match(subj) and tree != head_tree:
+        h, tree = line.split()
+        if tree != head_tree:
             return h
     return None
 
@@ -1660,9 +1648,9 @@ def vs_prev_same_boot(spark, specs, headline) -> dict:
     'regressions' (+9.1%, +13.6%) that dissolved into host state on
     same-code reruns — cross-BOOT absolute timings on this box shift
     up to ~40%, so round-over-round deltas were ungradeable. This
-    block times the PREVIOUS round-close commit's code (a detached git
-    worktree) against the live code in the SAME Spark session and
-    boot, interleaved per query (cur, prev, cur, prev; min-of-2 per
+    block times the parent commit's code (``_prev_round_commit``, a
+    detached git worktree) against the live code in the SAME Spark
+    session and boot, interleaved per query (cur, prev, cur, prev; min-of-2 per
     side), and reports the paired ratio — host state cancels out of a
     ratio taken seconds apart.
 
@@ -1677,7 +1665,7 @@ def vs_prev_same_boot(spark, specs, headline) -> dict:
     here = os.path.dirname(os.path.abspath(__file__))
     prev = _prev_round_commit(here)
     if not prev:
-        return {"skipped": "no prior round-close commit in git log"}
+        return {"skipped": "no parent commit with a different tree"}
     wt = tempfile.mkdtemp(prefix="bench_prev_wt_")
     shutil.rmtree(wt)  # git worktree add wants the path absent
     try:
@@ -1738,7 +1726,7 @@ def vs_prev_same_boot(spark, specs, headline) -> dict:
             "prev_commit": prev[:12],
             "method": "interleaved min-of-2 per side, same session/boot",
             "note": "ratio < 1 means the live code is faster than the"
-            " previous round-close on identical host state; cross-round"
+            " parent commit on identical host state; cross-commit"
             " deltas should be read from this, not from cross-boot"
             " absolute seconds",
             "median_ratio_cur_over_prev": median,

@@ -1741,7 +1741,7 @@ def band_canonical_dedup(
     of anything). They contribute no buckets to ``kept_buckets``
     (nothing to match on), so the streaming store never grows by
     them; collapsing IDENTICAL empty docs is exact dedup's job
-    (``streaming/dedup.py`` / qd01), not a similarity gate's.
+    (``streaming/pipeline.py`` / qd01), not a similarity gate's.
     Rule (b) is deliberately GREEDY, not transitively closed: if A<B
     share band 1 and B<C share band 2 (A≁C), C is dropped even though
     its bucket's canonical B was itself dropped. Note the asymmetry

@@ -6,94 +6,40 @@ field shapes come from protos/sensor_event.proto:8-73 and
 internal/types/types.go:3-188. Here both are first-class ``StructType``
 constants so the whole pipeline is schema-checked at plan time.
 
-proto3 ``optional`` → nullable column; required proto3 scalars are
-declared non-nullable (Spark treats nullability as advisory on read,
-but the declaration documents the contract and drives Avro nullability
-on write).
+The input side is not written out here: ``METRIC_SCHEMA`` and
+``SENSOR_EVENT_SCHEMA`` are derived from the proto field tables in
+``sources/protobuf_wire.py`` (the same tables the wire codec and the
+shipped descriptor use), in field-number order — the order
+``from_protobuf`` yields. proto3 ``optional`` → nullable column;
+required proto3 scalars are declared non-nullable (Spark treats
+nullability as advisory on read, but the declaration documents the
+contract and drives Avro nullability on write).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
 
-_METRIC_OPTIONAL_STRINGS = (
-    "snort_base64_data",
-    "snort_dst_address",
-    "snort_dst_ap",
-    "snort_eth_dst",
-    "snort_eth_src",
-    "snort_eth_type",
-    "snort_pkt_gen",
-    "snort_src_address",
-    "snort_src_ap",
-    "snort_target",
-    "snort_tcp_flags",
-)
+from event_stream_aggr_spark.sources.protobuf_wire import METRIC_FIELDS, SENSOR_EVENT_FIELDS
 
-_METRIC_OPTIONAL_LONGS = (
-    "snort_client_bytes",
-    "snort_client_pkts",
-    "snort_dst_port",
-    "snort_eth_len",
-    "snort_flowstart_time",
-    "snort_geneve_vni",
-    "snort_icmp_code",
-    "snort_icmp_id",
-    "snort_icmp_seq",
-    "snort_icmp_type",
-    "snort_ip_id",
-    "snort_ip_length",
-    "snort_mpls",
-    "snort_pkt_length",
-    "snort_pkt_number",
-    "snort_server_bytes",
-    "snort_server_pkts",
-    "snort_sgt",
-    "snort_tcp_ack",
-    "snort_tcp_len",
-    "snort_tcp_seq",
-    "snort_tcp_win",
-    "snort_time_to_live",
-    "snort_udp_length",
-    "snort_vlan",
-)
+_SCALARS = {"string": T.StringType(), "int64": T.LongType()}
+
+
+def _struct_of(table: list[tuple[int, str, str, bool]]) -> T.StructType:
+    """StructType of a proto field table, in field-number order."""
+    fields = []
+    for _, name, kind, optional in sorted(table):
+        dtype = T.ArrayType(METRIC_SCHEMA, containsNull=False) if kind == "metric[]" else _SCALARS[kind]
+        fields.append(T.StructField(name, dtype, optional))
+    return T.StructType(fields)
+
 
 #: Metric element (protos/sensor_event.proto:8-47). ``snort_timestamp``
 #: is the only required field (Snort alert clock, parsed app.go:195).
-METRIC_SCHEMA = T.StructType(
-    [T.StructField("snort_timestamp", T.StringType(), False)]
-    + [T.StructField(n, T.StringType(), True) for n in _METRIC_OPTIONAL_STRINGS]
-    + [T.StructField(n, T.LongType(), True) for n in _METRIC_OPTIONAL_LONGS]
-)
+METRIC_SCHEMA = _struct_of(METRIC_FIELDS)
 
 #: SensorEvent (protos/sensor_event.proto:49-73): header + repeated Metric.
-SENSOR_EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("metrics", T.ArrayType(METRIC_SCHEMA, containsNull=False), False),
-        T.StructField("event_hash_sha256", T.StringType(), False),
-        T.StructField("event_metrics_count", T.LongType(), False),
-        T.StructField("event_seconds", T.LongType(), False),
-        T.StructField("sensor_id", T.StringType(), False),
-        T.StructField("sensor_version", T.StringType(), False),
-        T.StructField("event_read_at", T.LongType(), False),
-        T.StructField("event_sent_at", T.LongType(), False),
-        T.StructField("event_received_at", T.LongType(), False),
-        T.StructField("snort_action", T.StringType(), True),
-        T.StructField("snort_classification", T.StringType(), True),
-        T.StructField("snort_direction", T.StringType(), True),
-        T.StructField("snort_interface", T.StringType(), False),
-        T.StructField("snort_message", T.StringType(), False),
-        T.StructField("snort_priority", T.LongType(), False),
-        T.StructField("snort_protocol", T.StringType(), False),
-        T.StructField("snort_rule_gid", T.LongType(), False),
-        T.StructField("snort_rule_rev", T.LongType(), False),
-        T.StructField("snort_rule_sid", T.LongType(), False),
-        T.StructField("snort_rule", T.StringType(), False),
-        T.StructField("snort_seconds", T.LongType(), False),
-        T.StructField("snort_service", T.StringType(), True),
-        T.StructField("snort_type_of_service", T.LongType(), True),
-    ]
-)
+SENSOR_EVENT_SCHEMA = _struct_of(SENSOR_EVENT_FIELDS)
 
 #: Metadata struct nested in SnortAlert (internal/types/types.go:3-24).
 #: *_at fields are ISO-8601 strings with trailing zeros suppressed

@@ -10,11 +10,12 @@ S4 contract RUN anyway:
   dict), nullable field → ``["null", T]`` union — the same mapping
   spark-avro applies, so the schema JSON is reusable with the real jar.
 - ``encode_record`` / ``decode_record``: the Avro binary encoding from
-  the public spec — zigzag-varint longs, length-prefixed UTF-8 strings
-  and bytes, union-index prefixes, single-block arrays, record fields
-  in schema order.
+  the public spec — zigzag-varint longs (zigzag over the protobuf
+  codec's unsigned varint), length-prefixed UTF-8 strings and bytes,
+  union-index prefixes, single-block arrays, record fields in schema
+  order.
 - ``encode_avro_py``: the jar-free executable sink stage (Arrow-batched
-  ``mapInPandas``) producing the same (key, headers, value BINARY)
+  ``mapInArrow``) producing the same (key, headers, value BINARY)
   frame ``sources.kafka.encode_avro`` would; compose with
   ``sources.registry.frame_confluent`` for the registry wire format.
 """
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from event_stream_aggr_spark.sources.kafka import avro_payload_columns
+from event_stream_aggr_spark.sources.protobuf_wire import read_varint, write_varint
 
 # ---------------------------------------------------------------------------
 # Schema mapping
@@ -73,67 +75,21 @@ def avro_schema_of(
 # ---------------------------------------------------------------------------
 
 
-def _zigzag_enc(n: int) -> int:
-    return (n << 1) ^ (n >> 63)
-
-
-def _zigzag_dec(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
-
-
 def _write_long(n: int) -> bytes:
-    n = _zigzag_enc(n) & 0xFFFFFFFFFFFFFFFF
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    """Avro long/int: zigzag, then the shared unsigned varint."""
+    return write_varint((n << 1) ^ (n >> 63))
 
 
 def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = result = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("truncated varint")
-        if shift > 63:  # Avro longs are <=10 varint bytes
-            raise ValueError("varint exceeds 10 bytes")
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return _zigzag_dec(result), pos
-        shift += 7
-
-
-def _is_null(value: Any, nan_is_null: bool = True) -> bool:
-    """Null under Arrow→pandas conventions: None, pd.NA — and NaN only
-    when ``nan_is_null`` (a nullable int64 column crossing mapInPandas
-    becomes float64 with NaN for the nulls — the dtype Spark hands us,
-    so NaN in an *integer* union column means SQL NULL). For genuine
-    double/float branches NaN is a legal IEEE payload and must encode
-    literally, so callers pass nan_is_null=False there."""
-    if value is None:
-        return True
-    if nan_is_null and isinstance(value, float) and value != value:
-        return True
-    try:
-        import pandas as pd
-
-        return value is pd.NA
-    except ImportError:  # pragma: no cover
-        return False
+    n, pos = read_varint(buf, pos)
+    return (n >> 1) ^ -(n & 1), pos
 
 
 def _encode(value: Any, schema: Any) -> bytes:
     if isinstance(schema, list):  # union: zigzag index then value
         branch = next(s for s in schema if s != "null")
-        if _is_null(value, nan_is_null=branch not in ("double", "float")):
-            idx = schema.index("null")
-            return _write_long(idx)
+        if value is None:
+            return _write_long(schema.index("null"))
         idx = schema.index(branch)
         return _write_long(idx) + _encode(value, branch)
     if isinstance(schema, dict):
@@ -236,8 +192,9 @@ def decode_record(buf: bytes, schema: dict) -> dict:
 def encode_avro_py(df: DataFrame) -> DataFrame:
     """S4 executable path: alert rows → (envelope cols, value BINARY
     Avro). Jar-free analogue of ``sources.kafka.encode_avro`` — same
-    payload-column selection, same record schema."""
-    import pandas as pd
+    payload-column selection, same record schema. Envelope columns pass
+    through as Arrow arrays untouched."""
+    import pyarrow as pa
 
     payload_cols = avro_payload_columns(df.columns)
     payload_struct = T.StructType([df.schema[c] for c in payload_cols])
@@ -247,14 +204,12 @@ def encode_avro_py(df: DataFrame) -> DataFrame:
         [df.schema[c] for c in keep] + [T.StructField("value", T.BinaryType(), False)]
     )
 
-    def op(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            values = [
-                encode_record({c: row[c] for c in payload_cols}, schema)
-                for _, row in pdf.iterrows()
-            ]
-            out = pdf[keep].copy()
-            out["value"] = values
-            yield out
+    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            values = [encode_record(row, schema) for row in rb.select(payload_cols).to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(c) for c in keep] + [pa.array(values, pa.binary())],
+                names=keep + ["value"],
+            )
 
-    return df.mapInPandas(op, schema=out_schema)
+    return df.mapInArrow(op, schema=out_schema)

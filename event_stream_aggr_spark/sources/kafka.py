@@ -187,7 +187,6 @@ def to_kafka_records(
     df: DataFrame,
     topic: str,
     n_partitions: int = 4,
-    order_cols: list[str] | None = None,
     continue_from: DataFrame | None = None,
 ) -> DataFrame:
     """Producer-side record binding (batch): a sink frame carrying
@@ -227,9 +226,7 @@ def to_kafka_records(
         if "headers" in df.columns
         else F.lit(None).cast("array<struct<key:string,value:binary>>")
     )
-    order = order_cols or [c for c in ("key", "metric_idx") if c in df.columns]
-    if not order:
-        order = ["key"]
+    order = [c for c in ("key", "metric_idx") if c in df.columns] or ["key"]
     rec = df.withColumn(
         "partition",
         F.pmod(F.xxhash64(F.col("key").cast("binary")), F.lit(n_partitions)).cast("int"),

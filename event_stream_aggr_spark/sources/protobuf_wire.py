@@ -10,16 +10,19 @@ contract still needs to RUN, not just import — this module provides:
   format (varint + length-delimited fields) written by hand from the
   public spec. Used to build golden byte fixtures and to decode them.
 - ``decode_sensor_events_py``: the executable ingest stage — Arrow-
-  batched ``mapInPandas`` turning a ``value BINARY`` Kafka column into
+  batched ``mapInArrow`` turning a ``value BINARY`` Kafka column into
   SENSOR_EVENT_SCHEMA columns. Same plan shape as ``from_protobuf``
   (binary → struct at the stream edge); on a cluster with the
   spark-protobuf jar, ``sources.kafka.decode_protobuf`` is the JVM fast
   path and this is the jar-free fallback.
 - ``build_file_descriptor_set``: a hand-encoded
   ``FileDescriptorSet`` for sensor_event.proto (descriptor.proto is
-  itself protobuf, so the same primitives serialize it). The committed
-  fixture (tests/fixtures/sensor_event.desc) is what
+  itself protobuf, so the same primitives serialize it). The shipped
+  ``resources/sensor_event.desc`` is what
   ``from_protobuf(..., descFilePath=...)`` needs on a real cluster.
+- ``METRIC_FIELDS`` / ``SENSOR_EVENT_FIELDS``: the one declaration of
+  the message layout; the codec, the descriptor and
+  ``schemas.SENSOR_EVENT_SCHEMA`` all derive from them.
 
 Wire format notes (proto3): tag = (field_number << 3) | wire_type;
 wire_type 0 = varint (int32/int64/bool/enum), 2 = length-delimited
@@ -113,40 +116,39 @@ SENSOR_EVENT_FIELDS: list[tuple[int, str, str, bool]] = [
 # ---------------------------------------------------------------------------
 
 
-def _varint(n: int) -> bytes:
-    """Unsigned LEB128; negative int64 via 64-bit two's complement."""
-    if n < 0:
-        n &= 0xFFFFFFFFFFFFFFFF
+def write_varint(n: int) -> bytes:
+    """Unsigned LEB128 of ``n`` as 64 bits (a negative int64 is its
+    two's complement): the protobuf varint, and under zigzag the Avro
+    long (sources/avro_wire.py)."""
+    n &= 0xFFFFFFFFFFFFFFFF
     out = bytearray()
-    while True:
-        b = n & 0x7F
+    while n > 0x7F:
+        out.append((n & 0x7F) | 0x80)
         n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    out.append(n)
+    return bytes(out)
 
 
 def _tag(field: int, wire_type: int) -> bytes:
-    return _varint((field << 3) | wire_type)
+    return write_varint((field << 3) | wire_type)
 
 
 def _varint_field(field: int, value: int) -> bytes:
-    return _tag(field, 0) + _varint(value)
+    return _tag(field, 0) + write_varint(value)
 
 
 def _len_field(field: int, payload: bytes) -> bytes:
-    return _tag(field, 2) + _varint(len(payload)) + payload
+    return _tag(field, 2) + write_varint(len(payload)) + payload
 
 
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
+def read_varint(buf: bytes, pos: int) -> tuple[int, int]:
+    """Unsigned LEB128 at ``buf[pos:]`` → (value, next position)."""
     shift = 0
     result = 0
     while True:
         if pos >= len(buf):  # mid-varint truncation must FAIL like the
             raise ValueError("truncated varint")  # other wire-type paths
-        if shift > 63:  # proto varints are <=10 bytes; runaway cont. bits
+        if shift > 63:  # varints are <=10 bytes; runaway cont. bits
             raise ValueError("varint exceeds 10 bytes")
         b = buf[pos]
         pos += 1
@@ -165,13 +167,13 @@ def iter_fields(buf: bytes) -> Iterator[tuple[int, int, Any]]:
     length-delimited as bytes. Unknown fixed32/64 skipped correctly."""
     pos = 0
     while pos < len(buf):
-        key, pos = _read_varint(buf, pos)
+        key, pos = read_varint(buf, pos)
         field, wt = key >> 3, key & 7
         if wt == 0:
-            v, pos = _read_varint(buf, pos)
+            v, pos = read_varint(buf, pos)
             yield field, wt, v
         elif wt == 2:
-            ln, pos = _read_varint(buf, pos)
+            ln, pos = read_varint(buf, pos)
             if pos + ln > len(buf):  # slice would clamp: corrupt data must FAIL
                 raise ValueError(
                     f"truncated length-delimited field {field}: declares {ln} bytes, "
@@ -240,10 +242,6 @@ def _decode_fields(buf: bytes, table: list[tuple[int, str, str, bool]]) -> dict:
     return d
 
 
-def encode_metric(m: dict) -> bytes:
-    return _encode_fields(m, METRIC_FIELDS)
-
-
 def encode_sensor_event(e: dict) -> bytes:
     """SensorEvent dict (tests/fixtures.py shape) → proto3 bytes."""
     return _encode_fields(e, SENSOR_EVENT_FIELDS)
@@ -254,11 +252,9 @@ def decode_sensor_event(buf: bytes) -> dict:
     return _decode_fields(buf, SENSOR_EVENT_FIELDS)
 
 
-def decode_sensor_events_py(
-    df: DataFrame, value_col: str = "value", on_error: str = "drop"
-) -> DataFrame:
+def decode_sensor_events_py(df: DataFrame, on_error: str = "drop") -> DataFrame:
     """S3 executable path: ``value BINARY`` → SENSOR_EVENT_SCHEMA columns
-    via Arrow-batched ``mapInPandas`` (the jar-free analogue of
+    via Arrow-batched ``mapInArrow`` (the jar-free analogue of
     ``sources.kafka.decode_protobuf``; schema.go:23-34 semantics).
 
     ``on_error="drop"`` skips undecodable values (a poison message must
@@ -266,31 +262,32 @@ def decode_sensor_events_py(
     deserialize error and moves on); ``on_error="fail"`` re-raises for
     tests/batch audits.
     """
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from event_stream_aggr_spark.schemas import SENSOR_EVENT_SCHEMA
 
     if on_error not in ("drop", "fail"):
         raise ValueError(f"on_error must be 'drop' or 'fail', got {on_error!r}")
-    names = [f.name for f in SENSOR_EVENT_SCHEMA.fields]
+    arrow_schema = to_arrow_schema(SENSOR_EVENT_SCHEMA)
 
-    def op(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
+    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             decoded = []
-            for b in pdf[value_col]:
+            for b in rb.column("value").to_pylist():
                 try:
-                    decoded.append(decode_sensor_event(bytes(b)))
+                    decoded.append(decode_sensor_event(b))
                 except Exception:
                     # any malformation counts as poison (wrong wire type
                     # raises TypeError/AttributeError, truncation
-                    # ValueError, short varint IndexError, bad utf-8
-                    # UnicodeDecodeError): drop mode must survive all
+                    # ValueError, bad utf-8 UnicodeDecodeError, a null
+                    # value TypeError): drop mode must survive all
                     if on_error == "fail":
                         raise
-            if decoded:  # an all-dropped batch must not emit typeless columns
-                yield pd.DataFrame({n: [d[n] for d in decoded] for n in names})
+            if decoded:
+                yield pa.RecordBatch.from_pylist(decoded, schema=arrow_schema)
 
-    return df.mapInPandas(op, schema=SENSOR_EVENT_SCHEMA)
+    return df.mapInArrow(op, schema=SENSOR_EVENT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """Streaming near-dedup (round 11): the W4×L2 intersection.
 
-``streaming/dedup.py`` drops EXACT redeliveries by content hash; this
+``streaming/pipeline.py`` drops EXACT redeliveries by content hash; this
 module drops NEAR-duplicates of anything the corpus has already
 admitted — the ingest-time gate a 100 TB training-data pipeline puts
 in front of its document store (arriving shards are near-deduped
@@ -32,7 +32,7 @@ use, with the same replay contract):
 - TOKEN-LESS docs (empty/whitespace/NULL text) have no buckets and
   can near-match nothing: they are always ADMITTED and never enter
   the store (collapsing identical empties is exact dedup's job —
-  ``streaming/dedup.py``). The store's ``canon`` column keeps
+  ``streaming/pipeline.py``). The store's ``canon`` column keeps
   ``id_col``'s native type (string UUIDs attribute correctly;
   first-writer-wins needs only an orderable type).
 - redelivery of a committed epoch is a no-op (outputs already on

@@ -213,12 +213,3 @@ def load_table(
         df = _parallelize_scan(spark, df, path, PARALLELIZE_KEYS[name])
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view; returns the DataFrames."""
-    out = {}
-    for name in TABLE_NAMES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -167,3 +167,30 @@ def test_headline_line_fits_the_2000_char_tail():
     assert parsed["vs_prev"]["stream_ratios"] == {s: 1.053 for s in streams}
     assert parsed["calib_mid"] == [0.1713, 0.1959, 6.4211]
     assert parsed["calibration_sec"] == 0.3302
+
+
+def test_prev_round_commit_is_the_parent(tmp_path):
+    """vs_prev pairs against HEAD^ whatever its subject says, and steps
+    past a parent whose tree equals HEAD's (no self-comparison)."""
+    import subprocess
+
+    def git(*args):
+        return subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=tmp_path, check=True, capture_output=True, text=True,
+        ).stdout.strip()
+
+    git("init", "-q")
+    assert bench._prev_round_commit(str(tmp_path)) is None  # no commits
+    (tmp_path / "f").write_text("a")
+    git("add", "f")
+    git("commit", "-q", "-m", "round 1: verdict/advice/correctness/bench")
+    assert bench._prev_round_commit(str(tmp_path)) is None  # no parent
+    (tmp_path / "f").write_text("b")
+    git("commit", "-q", "-am", "an ordinary change")
+    parent = git("rev-parse", "HEAD")
+    (tmp_path / "f").write_text("c")
+    git("commit", "-q", "-am", "another ordinary change")
+    assert bench._prev_round_commit(str(tmp_path)) == parent
+    git("commit", "-q", "--allow-empty", "-m", "same tree as its parent")
+    assert bench._prev_round_commit(str(tmp_path)) == parent

@@ -9,6 +9,7 @@ import os
 from pyspark.sql import functions as F
 
 from event_stream_aggr_spark.plans.snort import flatten_alerts, with_kafka_envelope
+from event_stream_aggr_spark.schemas import SENSOR_EVENT_SCHEMA
 from event_stream_aggr_spark.sources.protobuf_wire import (
     METRIC_FIELDS,
     SENSOR_EVENT_FIELDS,
@@ -100,11 +101,28 @@ def test_bytes_to_flatten_alerts_roundtrip(spark):
     # the reference's ingest: Kafka value bytes → SensorEvent → one
     # alert per metric (app.go:192-216), executed end-to-end
     events = [make_sensor_event(i, n_metrics=i + 1) for i in range(4)]
+    for i, e in enumerate(events):
+        for j, m in enumerate(e["metrics"][1:], start=1):
+            m["snort_src_port"] = 40000 + 10 * i + j  # metric 0 leaves it unset
     raw = spark.createDataFrame(
         [(bytearray(encode_sensor_event(e)),) for e in events], "value binary"
     )
     decoded = decode_sensor_events_py(raw)
     assert [f.name for f in decoded.schema.fields] == [n for _, n, _, _ in SENSOR_EVENT_FIELDS]
+    # the Spark schema is the proto layout, nested Metric struct included
+    # (field 28 snort_src_port is decoded, so the struct must carry it)
+    assert decoded.schema == SENSOR_EVENT_SCHEMA
+    metric = decoded.schema["metrics"].dataType.elementType
+    assert metric.names == [n for _, n, _, _ in METRIC_FIELDS]
+    src_ports = {
+        r.event_hash_sha256: [m.snort_src_port for m in r.metrics]
+        for r in decoded.select("event_hash_sha256", "metrics").collect()
+    }
+    for e in events:
+        want = decode_sensor_event(encode_sensor_event(e))
+        assert src_ports[want["event_hash_sha256"]] == [
+            m["snort_src_port"] for m in want["metrics"]
+        ]
     alerts = flatten_alerts(decoded)
     assert alerts.count() == sum(e["event_metrics_count"] for e in events)  # 1+2+3+4
     by_sid = {r.sid: r for r in alerts.collect()}

@@ -11,17 +11,21 @@ Pins the module's stated contract:
    the emitted output; an epoch below the committed one raises (the
    fresh-checkpoint-against-nonempty-store signature);
 5. an end-to-end availableNow stream over a parquet dir produces the
-   same admitted set as driving the sink by hand.
+   same admitted set as driving the sink by hand, and across batches
+   the first arrival of a near-duplicate pair wins, whatever its id.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from event_stream_aggr_spark.operators.dedup import band_canonical_dedup
+from event_stream_aggr_spark.sources.files import stream_parquet_dir
 from event_stream_aggr_spark.streaming.near_dedup import near_dedup_sink
 from event_stream_aggr_spark.streaming.state_store import read_append_state
 
@@ -111,45 +115,64 @@ def test_redelivery_noop_and_stale_checkpoint_raises(spark, tmp_path):
         sink(_docs(spark, [(9, _TXT_Z)]), 0)
 
 
-def test_end_to_end_stream_matches_hand_driven(spark, tmp_path):
-    from event_stream_aggr_spark.sources.files import stream_parquet_dir
+def _write_arrivals(spark, src, groups):
+    """One parquet file per group of rows, with modification times in
+    list order: the file source replays files oldest first, so with
+    maxFilesPerTrigger=1 each group is one micro-batch, in this order."""
+    os.makedirs(src)
+    t0 = time.time() - 100
+    for i, rows in enumerate(groups):
+        part = os.path.join(src, f"_part{i}")
+        _docs(spark, rows).coalesce(1).write.parquet(part)
+        (name,) = [f for f in os.listdir(part) if f.endswith(".parquet")]
+        os.replace(os.path.join(part, name), os.path.join(src, f"arrival-{i}.parquet"))
+        os.utime(os.path.join(src, f"arrival-{i}.parquet"), (t0 + i, t0 + i))
+        shutil.rmtree(part)
 
-    src = str(tmp_path / "src")
-    docs = _docs(
-        spark,
-        [(1, _TXT_X), (2, _TXT_X), (3, _TXT_Y), (4, _TXT_Z), (5, _TXT_Z)],
-    )
-    docs.repartition(2).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
 
-    root, out = str(tmp_path / "state"), str(tmp_path / "out")
+def _run_stream(spark, src, root, out, ckpt):
     q = (
-        stream_parquet_dir(spark, src, schema, max_files_per_trigger=1)
+        stream_parquet_dir(spark, src, _docs(spark, []).schema, max_files_per_trigger=1)
         .writeStream.foreachBatch(near_dedup_sink(root, out))
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
 
-    # this corpus has no chains, so the admitted set is batch-boundary
-    # independent: exactly the kernel's single-batch answer
-    kernel_kept, _ = band_canonical_dedup(docs)
+
+def test_end_to_end_stream_matches_hand_driven(spark, tmp_path):
+    rows = [(1, _TXT_X), (2, _TXT_X), (3, _TXT_Y), (4, _TXT_Z), (5, _TXT_Z)]
+    src = str(tmp_path / "src")
+    _write_arrivals(spark, src, [rows[:4], rows[4:]])
+    root, out = str(tmp_path / "state"), str(tmp_path / "out")
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+    _run_stream(spark, src, root, out, ckpt)
+
+    # docs 4 and 5 are near-duplicates; 4 arrives first and the batch
+    # that holds 5 is vetoed by 4's stored buckets, so the stream keeps
+    # the kernel's single-batch answer (where smaller-id-wins keeps 4)
+    kernel_kept, _ = band_canonical_dedup(_docs(spark, rows))
     assert _kept_ids(spark, out) == {r.doc_id for r in kernel_kept.collect()}
     assert _kept_ids(spark, out) == {1, 3, 4}
     # a second identical stream run with the SAME checkpoint replays
     # nothing (availableNow already consumed the files): no new epochs
     committed_before = read_append_state(spark, root)[1]
-    q2 = (
-        stream_parquet_dir(spark, src, schema, max_files_per_trigger=1)
-        .writeStream.foreachBatch(near_dedup_sink(root, out))
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
+    _run_stream(spark, src, root, out, ckpt)
     assert read_append_state(spark, root)[1] == committed_before
     assert _kept_ids(spark, out) == {1, 3, 4}
+
+
+def test_end_to_end_stream_first_arrival_wins(spark, tmp_path):
+    # the reversed arrival: 5 lands a batch before 4, so 5 is admitted
+    # and 4 dropped — first arrival wins across batches, whatever the ids
+    src = str(tmp_path / "src")
+    _write_arrivals(
+        spark, src, [[(5, _TXT_Z)], [(1, _TXT_X), (2, _TXT_X), (3, _TXT_Y), (4, _TXT_Z)]]
+    )
+    root, out = str(tmp_path / "state"), str(tmp_path / "out")
+    _run_stream(spark, src, root, out, os.path.join(str(tmp_path), "ckpt"))
+    assert _kept_ids(spark, out) == {1, 3, 5}
 
 
 def test_tokenless_docs_are_admitted_not_silently_dropped(spark, tmp_path):
